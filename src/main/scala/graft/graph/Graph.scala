@@ -45,9 +45,10 @@ object WriteMode {
 /** A named node in the dataflow DAG: the Spark-native re-expression of a
   * `@dlt.table` / `@dlt.view` function (SURVEY.md §1.1). `transform`
   * receives the resolved dependency DataFrames in `deps` order and returns
-  * an unresolved logical plan (a DataFrame) — Catalyst owns all
-  * optimization across node boundaries because composition is plan-level,
-  * not materialization-level.
+  * a DataFrame. Within a table, Catalyst optimizes the transform and its
+  * inputs as one plan; across tables, [[Runner]] materializes each table
+  * once and its consumers read the written output (the `dlt.read`
+  * contract), so a transform sees a dependency as a table scan.
   */
 final case class TableDef(
     name: String,
@@ -61,17 +62,19 @@ final case class TableDef(
   * (`dlt.read`/`dlt.read_stream` edges, zetadex-transactions-helius
   * -pipeline.py:179–181, :351).
   *
-  * `resolve` is memoized per run so a node shared by several consumers is
-  * planned once; within a run everything stays one fused Catalyst plan —
-  * materialization happens only at [[Runner]] table boundaries, per each
-  * table's [[WriteMode]].
+  * `resolve` fuses a node with every unwritten dependency into one
+  * Catalyst plan, memoized within the call so a node shared by several
+  * consumers is planned once. [[Runner]] shadows each table it writes
+  * with a source reading the written output, so later resolves stop at
+  * materialized tables. Not thread-safe: the runner resolves and
+  * shadows on its coordinating thread only.
   */
 final class Registry(spark: SparkSession) {
   private val defs = mutable.LinkedHashMap.empty[String, TableDef]
   private val sources = mutable.LinkedHashMap.empty[String, () => DataFrame]
 
   /** The session this registry plans against — runners use it to shadow
-    * stateful tables with reads of their materialized paths. */
+    * written tables with reads of their materialized paths. */
   private[graph] def session: SparkSession = spark
 
   def register(t: TableDef): this.type = { defs(t.name) = t; this }

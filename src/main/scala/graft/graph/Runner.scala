@@ -1,39 +1,42 @@
 package graft.graph
 
+import java.util.concurrent.{CompletionException, Executors, LinkedBlockingQueue}
+import scala.collection.mutable
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** DAG executors — the engine's stand-in for the DLT runtime's two
   * update modes (SURVEY.md §1.1, §2.11).
   *
-  * Batch: topological materialization of every registered table.
+  * Batch: every registered table is materialized once. Fusion happens
+  * WITHIN a table (its transform over its inputs is one Catalyst plan);
+  * ACROSS tables the `dlt.read` contract holds: after a table is written
+  * its name is shadowed by a read of the written output, so consumers
+  * read the materialized table instead of re-deriving its plan from the
+  * sources. Tables whose dependencies are all written run concurrently.
   *
   * Streaming: tables flagged [[Mode.Incremental]] run as one fused
   * Structured Streaming query per leaf (micro-batch, Trigger.AvailableNow
   * for a catch-up run — the hourly-cluster cadence of the reference,
-  * transactions:926); tables flagged [[Mode.Full]] are batch-recomputed
-  * from the materialized incremental outputs afterwards, exactly like the
-  * reference forces window-function gold tables to `dlt.read`
-  * (orderbook:571–574).
+  * transactions:926); tables flagged [[Mode.Full]] are then batch-written
+  * by the same table loop over the materialized incremental outputs,
+  * exactly like the reference forces window-function gold tables to
+  * `dlt.read` (orderbook:571–574).
   */
 object Runner {
 
-  /** Write one resolved table per its [[WriteMode]]. Returns true when
-    * the on-disk table now carries state BEYOND this run's plan (Append
-    * accumulates partitions, Upsert merges history) — the signal that
-    * downstream consumers must READ the materialized table rather than
-    * re-derive its plan, or they would compute from this run's partial
-    * view of an accumulating table. */
+  /** Write one resolved table per its [[WriteMode]]. */
   private def writeTable(df: DataFrame, t: Option[TableDef],
-                         path: String): Boolean = {
+                         path: String): Unit = {
     val parts = t.map(_.partitionCols).getOrElse(Nil)
     t.map(_.writeMode).getOrElse(WriteMode.Overwrite) match {
       case WriteMode.Overwrite =>
         val w = df.write.mode("overwrite")
         (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-        false
       case WriteMode.Append =>
         // K3 idempotent append: overwrite ONLY the partitions this run
         // produced (mm-uptime's hourly cadence); a re-run of the same
@@ -43,7 +46,6 @@ object Runner {
         df.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(parts: _*).parquet(path)
-        true
       case WriteMode.Upsert(keys, seqCol, tie) =>
         // checkEmpty=false: a batch-mode plan is essentially never empty
         // and the emptiness probe would execute the full plan once more
@@ -51,51 +53,109 @@ object Runner {
           ManifestStore.upsert(path, keys, seqCol, tie, parts,
             checkEmpty = false)(df)
         else upsertParquet(path, keys, seqCol, tie, checkEmpty = false)(df)
-        true
     }
   }
 
-  /** How downstream consumers read a STATEFUL table back: partitioned
-    * upsert tables live behind a [[ManifestStore]] manifest (readers
-    * must resolve the committed generation — a raw path read would see
-    * no data, by design); everything else is a plain parquet read. Both
-    * pin the PLAN's schema, not directory inference — a read without it
-    * re-types partition columns from directory names (string "00" →
-    * int 0) and reorders them to the end, silently changing what
-    * downstream consumers see. */
+  /** How consumers read a written table back: partitioned upsert tables
+    * live behind a [[ManifestStore]] manifest (readers must resolve the
+    * committed generation — a raw path read would see no data, by
+    * design); everything else is a plain parquet read. Both pin the
+    * PLAN's schema, not directory inference — a read without it re-types
+    * partition columns from directory names (string "00" → int 0). The
+    * pinned read still moves partition columns to the end, so the plan's
+    * column order is restored. File reads report every column nullable.
+    * For an Append/Upsert table the read is the ACCUMULATED table, not
+    * this run's rows. */
   private def shadowLoader(spark: SparkSession, t: Option[TableDef],
-                           path: String,
-                           planSchema: org.apache.spark.sql.types.StructType)
-      : () => DataFrame =
+                           path: String, planSchema: StructType)
+      : () => DataFrame = {
+    val order = planSchema.fieldNames.map(c => col(s"`$c`")).toIndexedSeq
     t match {
       case Some(td) if td.partitionCols.nonEmpty &&
           td.writeMode.isInstanceOf[WriteMode.Upsert] =>
-        () => ManifestStore.read(spark, path, Some(planSchema))
-      case _ => () => spark.read.schema(planSchema).parquet(path)
+        () => ManifestStore.read(spark, path, Some(planSchema)).select(order: _*)
+      case _ => () => spark.read.schema(planSchema).parquet(path).select(order: _*)
     }
+  }
 
-  /** Materialize every table batch-style under `outDir`, in topo order,
-    * honoring each table's partition columns (the reference's
-    * `partition_cols=["date_"]` convention, transactions:996) and write
-    * mode. After a STATEFUL table (Append/Upsert) is written, its name is
-    * shadowed by a read of the materialized path, so downstream consumers
-    * see the full accumulated table — matching how the streaming runner's
-    * Full tables read materialized boundaries. Returns the materialized
-    * paths. */
+  /** The one table-write loop, shared by [[runBatch]] and the Full phase
+    * of [[runStreamingThenFull]]: write `names` (registered in `work`)
+    * under `outDir` and return their paths.
+    *
+    * A table starts once every dependency in `names` is written. Each is
+    * resolved on the calling thread — the only thread that touches `work`
+    * — and written on a pool bounded by the DAG's widest level and the
+    * context's default parallelism; the write task carries the caller's
+    * local properties (job group, job tags, scheduler pool), so
+    * `cancelJobGroup` still stops a refresh. Once written, the table's
+    * name is shadowed by a read of its output ([[shadowLoader]]), so
+    * consumers read it rather than re-derive it. The first failure stops
+    * new tables from starting; writes already running finish, the pool's
+    * threads exit, and the original exception is rethrown. */
+  private def writeTables(work: Registry, names: Seq[String],
+                          outDir: String): Map[String, String] = {
+    val spark = work.session
+    val deps = names.map(n =>
+      n -> work.describe(n).toSeq.flatMap(_.deps).filter(names.contains)).toMap
+    val level = mutable.Map.empty[String, Int]
+    names.foreach(n => level(n) = deps(n).map(level(_) + 1).maxOption.getOrElse(0))
+    val width = level.values.groupBy(identity).values.map(_.size).maxOption.getOrElse(1)
+    val threads = mutable.ArrayBuffer.empty[Thread]
+    val pool = Executors.newFixedThreadPool(
+      math.min(width, spark.sparkContext.defaultParallelism),
+      { (r: Runnable) => threads.synchronized {
+        val t = new Thread(r, s"graft-runner-${threads.size}")
+        t.setDaemon(true)
+        threads += t
+        t
+      } })
+    val finished = new LinkedBlockingQueue[(String, StructType, Option[Throwable])]
+    val written = mutable.HashSet.empty[String]
+    var pending = names
+    var running = 0
+    try {
+      while (pending.nonEmpty || running > 0) {
+        val (ready, blocked) = pending.partition(deps(_).forall(written))
+        pending = blocked
+        ready.foreach { n =>
+          val df = work.resolve(n)
+          val schema = df.schema
+          val write = SQLExecution.withThreadLocalCaptured(
+            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool) {
+            writeTable(df, work.describe(n), s"$outDir/$n")
+          }
+          running += 1
+          write.whenComplete((_, e) => finished.put((n, schema, Option(e))))
+        }
+        val (n, schema, error) = finished.take()
+        running -= 1
+        error.foreach {
+          case e: CompletionException if e.getCause != null => throw e.getCause
+          case e => throw e
+        }
+        work.source(n, shadowLoader(spark, work.describe(n), s"$outDir/$n", schema))
+        written += n
+      }
+    } finally {
+      pool.shutdown()
+      while (running > 0) { finished.take(); running -= 1 }
+      threads.synchronized(threads.toList).foreach(_.join())
+    }
+    names.map(n => n -> s"$outDir/$n").toMap
+  }
+
+  /** Materialize every table batch-style under `outDir` through
+    * [[writeTables]], honoring each table's partition columns (the
+    * reference's `partition_cols=["date_"]` convention, transactions:996)
+    * and write mode. Consumers read each written table — for an
+    * Append/Upsert table that is the full accumulated table, matching
+    * how the streaming runner's Full tables read materialized
+    * boundaries. Returns the materialized paths. */
   def runBatch(reg: Registry, outDir: String): Map[String, String] = {
-    val spark = reg.session
-    val work = new Registry(spark)
+    val work = new Registry(reg.session)
     reg.sourceLoaders.foreach { case (n, f) => work.source(n, f) }
     reg.topoOrder.flatMap(reg.describe).foreach(work.register)
-    reg.topoOrder.map { name =>
-      val path = s"$outDir/$name"
-      val df = work.resolve(name)
-      val planSchema = df.schema
-      val stateful = writeTable(df, work.describe(name), path)
-      if (stateful)
-        work.source(name, shadowLoader(spark, work.describe(name), path, planSchema))
-      name -> path
-    }.toMap
+    writeTables(work, reg.topoOrder, outDir)
   }
 
   /** Merge `batch` into the parquet table at `path`, keeping the
@@ -266,14 +326,8 @@ object Runner {
             .start()
       }
       q.awaitTermination()
-      // opt-in measurement probe (guide §1: attribute before optimizing):
-      // per-micro-batch duration breakdown on stderr, never in query paths
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROBE"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-probe] $name batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durations=${p.durationMs}"))
-      // the boundary's PLAN schema, for the same reason as runBatch:
-      // consumers must not see directory-inference re-typing
+      // the boundary's PLAN schema: consumers must not see
+      // directory-inference re-typing (see shadowLoader)
       name -> (path, resolved.schema)
     }.toMap
     // A terminated query's state-store providers stay loaded in the
@@ -299,19 +353,7 @@ object Runner {
       batchReg.source(n, shadowLoader(spark, defs(n), p, schema))
     }
     full.flatMap(defs(_)).foreach(batchReg.register)
-    val fullOut = full.map { name =>
-      val path = s"$outDir/$name"
-      // same write dispatch and stateful-shadowing as runBatch: a Full
-      // table with Append/Upsert semantics accumulates across runs, and
-      // its consumers must read the accumulated table (with the plan's
-      // schema — see runBatch)
-      val df = batchReg.resolve(name)
-      val planSchema = df.schema
-      val stateful = writeTable(df, defs(name), path)
-      if (stateful)
-        batchReg.source(name, shadowLoader(spark, defs(name), path, planSchema))
-      name -> path
-    }.toMap
+    val fullOut = writeTables(batchReg, full, outDir)
     written.view.mapValues(_._1).toMap ++ fullOut
   }
 }

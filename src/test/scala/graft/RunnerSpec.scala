@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{ManifestStore, Mode, Registry, Runner, TableDef, WriteMode}
 import graft.pipelines.EventsPipeline
@@ -54,6 +58,10 @@ class RunnerSpec extends AnyFunSuite {
       r.register(TableDef("cleaned_mm_uptime", Seq("uptime_feed"),
         { case Seq(u) => u }, mode = Mode.Full,
         partitionCols = Seq("hour_"), writeMode = WriteMode.Append))
+      // a consumer sees the plan's column order, not the partition
+      // column moved to the end by the read of the written table
+      r.register(TableDef("uptime_copy", Seq("cleaned_mm_uptime"),
+        { case Seq(u) => u }, mode = Mode.Full))
       r
     }
     Runner.runBatch(reg(Seq("h00" -> 10L, "h01" -> 20L)), out)
@@ -65,6 +73,7 @@ class RunnerSpec extends AnyFunSuite {
       .select("hour_", "seconds_up").as[(String, Long)].collect().toSet
     assert(got === Set("h00" -> 10L, "h01" -> 25L, "h02" -> 30L),
       "untouched partitions survive, recomputed ones replace, no doubles")
+    assert(sp.read.parquet(s"$out/uptime_copy").columns.toSeq === Seq("hour_", "seconds_up"))
   }
 
   test("WriteMode.Upsert: batch runs merge into the existing table by key") {
@@ -200,5 +209,99 @@ class RunnerSpec extends AnyFunSuite {
     assert(rows(1L) === ("A", null), "updated key takes the batch's shape")
     assert(rows(3L) === ("c", "x3"),
       "untouched key in the rewritten partition keeps its extra column")
+  }
+
+  // The dlt.read contract: consumers read each written table instead of
+  // re-deriving it, and independent tables are written concurrently —
+  // neither may change what any table holds. File reads report every
+  // column nullable, so the written table's nullability can be looser
+  // than the plan's; names, types and rows must be equal. Set operations
+  // cannot compare maps, so map-bearing columns compare as JSON.
+  test("runBatch writes every TransactionsPipeline table equal to its fused plan") {
+    val reg = TransactionsPipelineSpec.registry(spark, withBurns = true)
+    val out = Files.createTempDirectory("runner_tx_equiv").toString
+    val paths = Runner.runBatch(reg, out)
+    assert(paths.keySet === reg.tableNames.toSet)
+    assert(paths.size === 20)
+    def shape(s: StructType): Seq[(String, String)] =
+      s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    def comparable(df: DataFrame): DataFrame = df.select(df.schema.fields.toSeq.map(f =>
+      if (f.dataType.catalogString.contains("map<")) to_json(col(f.name)).as(f.name)
+      else col(f.name)): _*)
+    for (name <- reg.tableNames) {
+      val fused = reg.resolve(name)
+      val written = spark.read.parquet(paths(name))
+      assert(shape(written.schema) === shape(fused.schema), name)
+      assert(written.count() > 0, s"$name must be non-empty in the fixture")
+      val (w, f) = (comparable(written), comparable(fused))
+      assert(w.exceptAll(f).isEmpty, s"$name written minus fused")
+      assert(f.exceptAll(w).isEmpty, s"$name fused minus written")
+    }
+  }
+
+  private def runnerThreads: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-runner")).toSet
+
+  test("a failing table fails runBatch with its own exception; consumers are not written") {
+    val sp = spark
+    import sp.implicits._
+    val boom = new IllegalStateException("transform failed")
+    val failAt = udf((k: Long) => if (k == 3L) throw new ArithmeticException("row 3") else k)
+    val out = Files.createTempDirectory("runner_fail").toString
+    def reg(failing: TableDef): Registry = {
+      val r = new Registry(sp)
+      r.source("feed", () => (1L to 4L).toDF("k"))
+      r.register(TableDef("ok", Seq("feed"), { case Seq(f) => f }))
+      r.register(failing)
+      r.register(TableDef("after", Seq("bad", "ok"), { case Seq(b, o) => b.union(o) }))
+      r
+    }
+    val thrown = intercept[IllegalStateException](Runner.runBatch(
+      reg(TableDef("bad", Seq("feed"), _ => throw boom)), out))
+    assert(thrown eq boom, "the transform's exception, unwrapped")
+    assert(runnerThreads.isEmpty, "no pool thread outlives the call")
+    assert(!Files.exists(java.nio.file.Path.of(s"$out/after")))
+    val failed = intercept[SparkException](Runner.runBatch(
+      reg(TableDef("bad", Seq("feed"), { case Seq(f) => f.select(failAt(col("k")).as("k")) })),
+      out))
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), "the write's own failure")
+    assert(runnerThreads.isEmpty, "no pool thread outlives the call")
+    assert(!Files.exists(java.nio.file.Path.of(s"$out/after")),
+      "a consumer of the failed table must not be written")
+  }
+
+  test("jobs launched by runBatch carry the caller's job group") {
+    val sp = spark
+    import sp.implicits._
+    val sc = sp.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .flatMap(Option(_)).getOrElse("<none>"))
+    }
+    val r = new Registry(sp)
+    r.source("feed", () => (1L to 100L).toDF("k"))
+    // three independent tables and a consumer: written concurrently
+    Seq("a", "b", "c").foreach(n =>
+      r.register(TableDef(n, Seq("feed"), { case Seq(f) => f.groupBy(col("k") % 7).count() })))
+    r.register(TableDef("d", Seq("a", "b", "c"), { case Seq(a, b, c) => a.union(b).union(c) }))
+    val out = Files.createTempDirectory("runner_group").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("runner-spec-group", "refresh", interruptOnCancel = true)
+      try Runner.runBatch(r, out) finally sc.clearJobGroup()
+      // job starts reach listeners in submission order: once this
+      // sentinel's start is seen, every job of the run has been seen
+      sc.setJobGroup("runner-spec-sentinel", "sentinel")
+      try sp.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("runner-spec-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val seen = groups.asScala.toSeq.takeWhile(_ != "runner-spec-sentinel")
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "runner-spec-group"), seen.distinct)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.pipelines.TransactionsPipeline
 
@@ -15,12 +16,11 @@ case class Tx(signature: String, instructions: Seq[TxIx],
 case class BurnCompressed(assetId: Seq[String])
 case class BurnEvents(compressed: BurnCompressed)
 
-/** Hand-computed expectations over a deterministic nested fixture shaped
-  * like the reference's bronze transactions (FIXTURES.md §1). */
-class TransactionsPipelineSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def ts(s: String) = Timestamp.valueOf(s)
+/** The nested bronze fixture shared by the pipeline and runner specs:
+  * every one of the 20 tables is non-empty when the burn feed and its
+  * dim are supplied ([[registry]] with `withBurns`). */
+object TransactionsPipelineSpec {
+  def ts(s: String) = Timestamp.valueOf(s)
   private val acc = TxAccounts(Map("authority" -> "authA"), Seq.empty)
   // deposit/withdraw instructions carry the zetagroup key (TX:380–387);
   // order instructions carry the market key (TX:475–479)
@@ -29,7 +29,7 @@ class TransactionsPipelineSpec extends AnyFunSuite {
   private def accMkt(m: String) = TxAccounts(
     Map("authority" -> "authA", "market" -> m), Seq.empty)
 
-  private def fixture = Seq(
+  def fixture = Seq(
     Tx("sig1", Seq(
       TxIx("deposit", Map("amount" -> "1500000"), accZg, "zeta", Seq.empty),
       TxIx("place_perp_order_v3",
@@ -83,8 +83,7 @@ class TransactionsPipelineSpec extends AnyFunSuite {
 
   // margin-account snapshots for the pnl chain; the 10:00 rows join the
   // 09:00 deposit/withdraw hourly aggs through the +1h offset join
-  private def pnlFixture = {
-    val sp = spark
+  def pnlFixture(sp: SparkSession) = {
     import sp.implicits._
     Seq(
       (ts("2024-01-05 09:00:00"), Option.empty[String], "authA",
@@ -100,8 +99,26 @@ class TransactionsPipelineSpec extends AnyFunSuite {
         "balance", "unrealized_pnl")
   }
 
-  private def registry = {
-    val sp = spark
+  def burnFixture(sp: SparkSession) = {
+    import sp.implicits._
+    Seq(
+      ("sigB1", BurnEvents(BurnCompressed(Seq("mintA"))), "authA",
+        ts("2024-01-05 09:30:00"), 3),
+      ("sigB2", BurnEvents(BurnCompressed(Seq("mintA"))), "authA",
+        ts("2024-01-05 10:30:00"), 1), // overlaps hour 10 with sigB1
+      (graft.core.Conf.ExcludedBurnSignature,
+        BurnEvents(BurnCompressed(Seq("mintA"))), "authZ",
+        ts("2024-01-05 09:30:00"), 1))
+      .toDF("signature", "events", "feePayer", "timestamp", "duration")
+  }
+
+  def zpassFixture(sp: SparkSession) = {
+    import sp.implicits._
+    Seq(("mintA", "gold", 2.0, "s2"), ("mintB", "red", 1.5, "s2"))
+      .toDF("mint", "color", "multiplier", "season")
+  }
+
+  def registry(sp: SparkSession, withBurns: Boolean = false) = {
     import sp.implicits._
     TransactionsPipeline.build(sp, () => fixture.toDF(),
       zetagroupMapping = Some(() =>
@@ -109,8 +126,20 @@ class TransactionsPipelineSpec extends AnyFunSuite {
       markets = Some(() =>
         Seq(("mkt_sol", "SOL"), ("mkt_eth", "ETH"))
           .toDF("market_pub_key", "asset")),
-      rawPnl = Some(() => pnlFixture))
+      rawPnl = Some(() => pnlFixture(sp)),
+      rawBurnEvents = Option.when(withBurns)(() => burnFixture(sp)),
+      zpassNfts = Option.when(withBurns)(() => zpassFixture(sp)))
   }
+}
+
+/** Hand-computed expectations over a deterministic nested fixture shaped
+  * like the reference's bronze transactions (FIXTURES.md §1). */
+class TransactionsPipelineSpec extends AnyFunSuite {
+  import TransactionsPipelineSpec._
+  private lazy val spark = TestSpark.spark
+
+  private def registry = TransactionsPipelineSpec.registry(spark)
+  private def pnlFixture = TransactionsPipelineSpec.pnlFixture(spark)
 
   test("cleaned_ix_deposit decodes fixed-point amounts from successful txs only") {
     val rows = registry.resolve("cleaned_ix_deposit").collect()
@@ -234,21 +263,9 @@ class TransactionsPipelineSpec extends AnyFunSuite {
   test("nft burn family: nested-element dim join, hour explosion, max multiplier") {
     val sp = spark
     import sp.implicits._
-    val burns = Seq(
-      ("sigB1", BurnEvents(BurnCompressed(Seq("mintA"))), "authA",
-        ts("2024-01-05 09:30:00"), 3),
-      ("sigB2", BurnEvents(BurnCompressed(Seq("mintA"))), "authA",
-        ts("2024-01-05 10:30:00"), 1), // overlaps hour 10 with sigB1
-      (graft.core.Conf.ExcludedBurnSignature,
-        BurnEvents(BurnCompressed(Seq("mintA"))), "authZ",
-        ts("2024-01-05 09:30:00"), 1))
-      .toDF("signature", "events", "feePayer", "timestamp", "duration")
-    val dim = Seq(("mintA", "gold", 2.0, "s2"), ("mintB", "red", 1.5, "s2"))
-      .toDF("mint", "color", "multiplier", "season")
-    val reg = {
-      TransactionsPipeline.build(sp, () => fixture.toDF(),
-        rawBurnEvents = Some(() => burns), zpassNfts = Some(() => dim))
-    }
+    val reg = TransactionsPipeline.build(sp, () => fixture.toDF(),
+      rawBurnEvents = Some(() => burnFixture(sp)),
+      zpassNfts = Some(() => zpassFixture(sp)))
     val cleaned = reg.resolve("cleaned_compressed_nft_burn_events")
       .orderBy("signature").collect()
     assert(cleaned.length === 2, "excluded signature filtered")
